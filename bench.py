@@ -8,6 +8,10 @@ plan, not a collect) and prints ONE JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Usage: python bench.py  (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
+
+It is also the timing core of tools/bench_solo.py and
+tools/opt_measure.py: `noop`, `warm_up`, `clear_session_cache`,
+`best_of` (with its stall guard) and `calibration_probe`.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from big_data_final_project_spark.operators import scale  # noqa: E402
 from big_data_final_project_spark.registry import catalog  # noqa: E402
 from big_data_final_project_spark.session import get_spark  # noqa: E402
 
@@ -96,145 +101,130 @@ HEADLINE = [
 ]
 
 
-def _run(df) -> None:
+def noop(df) -> None:
     """Force full execution of every column without collecting."""
     df.write.format("noop").mode("overwrite").save()
 
 
-def _calibration_probe(spark) -> float:
-    """Fixed synthetic job (VERDICT r6 #3): a pinned-size range ->
-    shuffle -> aggregate with no data dependence, timed best-of-3.
-    Its wall time measures the BOX (CPU, scheduler, outside-VM
-    stalls), not the engine — recorded at the start and end of every
-    bench run so a cross-round headline drift can be attributed:
-    probe moved with it = environment drift; probe flat = engine
-    regression. Normalize as headline / (probe / probe_r7_reference).
+def timed(fn) -> float:
+    t0 = time.perf_counter()
+    fn()
+    return time.perf_counter() - t0
 
-    r13 measurement fix (documented in OPTIMIZATION_r13.md): the
-    probe's aggregation exchange inherited the SESSION's shuffle-
-    partition conf, so the r13 volume-derived partition clamp
-    (session.py) sped the probe itself ~30% (0.25 vs 0.36 s measured
-    alternating at 8 vs 32) — a pinned box meter must not move with
-    engine tuning. The probe now pins its historical 32-partition
-    shape explicitly; pre-r13 probe numbers (BENCH_r*.json) were all
-    taken at 32 and stay comparable."""
+
+def best_of(fn, n: int = 3, before=None) -> list[float]:
+    """`n` timed calls of `fn` (`before` runs untimed ahead of each),
+    plus a stall guard: outside-VM stalls have been measured at up to
+    25 s on a query whose floor is 1.8 s, so when the second-best run
+    is twice the best, the sample is stall-heavy and a 4th run is
+    taken."""
+
+    def once() -> float:
+        if before is not None:
+            before()
+        return timed(fn)
+
+    runs = [once() for _ in range(n)]
+    if len(runs) > 1 and sorted(runs)[1] > 2.0 * sorted(runs)[0]:
+        runs.append(once())
+    return runs
+
+
+def clear_session_cache() -> None:
+    """Drop the session-scoped intermediates (and free their executor
+    blocks), so the next run pays the query's full build cost."""
+    for df in scale._SESSION_CACHE.values():
+        try:
+            df.unpersist(blocking=False)
+        except Exception:
+            pass
+    scale._SESSION_CACHE.clear()
+
+
+def warm_up(spark, df) -> None:
+    """One full untimed run warms the JVM (codegen JIT, parquet reader,
+    shuffle; a limit(1) is not enough, AQE short-circuits the
+    aggregation), and one tiny mapInPandas job warms the Python/Arrow
+    worker pool, so pandas-path queries measure steady state."""
+    noop(df)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    workers = spark.range(64, numPartitions=cpus).mapInPandas(
+        lambda it: (pdf for pdf in it), schema="id long"
+    )
+    noop(workers)
+
+
+def sf_value(sf_dir: str):
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    try:
+        return float(sf)
+    except ValueError:
+        return sf
+
+
+def calibration_probe(spark) -> float:
+    """A pinned-size range -> shuffle -> aggregate with no data
+    dependence, best of 3. It measures the BOX (CPU, scheduler,
+    outside-VM stalls), not the engine: taken at the start and end of
+    every run, so a headline drift can be attributed (probe moved with
+    it = environment; probe flat = engine). The exchange is pinned at
+    32 partitions so engine tuning of the session's partition count
+    never moves the meter."""
     from pyspark.sql import functions as F
+
+    def job() -> None:
+        noop(
+            spark.range(50_000_000, numPartitions=32)
+            .withColumn("k", F.col("id") % 1000)
+            .groupBy("k")
+            .agg(F.sum("id").alias("s"), F.count("*").alias("n"))
+        )
 
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
     spark.conf.set(key, "32")
     try:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _run(
-                spark.range(50_000_000, numPartitions=32)
-                .withColumn("k", F.col("id") % 1000)
-                .groupBy("k")
-                .agg(F.sum("id").alias("s"), F.count("*").alias("n"))
-            )
-            runs.append(time.perf_counter() - t0)
-        return round(min(runs), 4)
+        return round(min(timed(job) for _ in range(3)), 4)
     finally:
         spark.conf.set(key, saved)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        sf_val = sf
+    sf_val = sf_value(sf_dir)
     spark = get_spark(app_name="bench")
 
     cat = catalog()
     names = [n for n in HEADLINE if n in cat]
-    # Warm the JVM (whole-stage codegen JIT, parquet reader, shuffle
-    # machinery) with one full untimed run — a limit(1) is not enough,
-    # AQE short-circuits the aggregation and leaves the agg path cold.
-    _run(cat[names[0]].fn(spark, sf_dir))
-    # Warm the Python/Arrow worker pool too (one tiny mapInPandas job)
-    # so pandas-path queries measure steady state, not worker spawn.
-    import pandas as _pd
+    warm_up(spark, cat[names[0]].fn(spark, sf_dir))
+    probe_start = calibration_probe(spark)
 
-    spark.range(64, numPartitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).mapInPandas(
-        lambda it: (pdf for pdf in it), schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    def run(name: str) -> None:
+        noop(cat[name].fn(spark, sf_dir))
 
-    probe_start = _calibration_probe(spark)
-
-    times: dict[str, float] = {}
-    # Best of 2 (3 when the two disagree >50%): the box this runs on
-    # sees sporadic multi-second stalls from outside the VM (observed
-    # 10-25x single-query inflation; NOT steal/disk/GC — all measured
-    # clean while it happened), so a single timing sometimes measures
-    # the neighbor, not the engine. Min over repeats measures the
-    # engine. Cache is NOT reused between runs (each .fn call builds
-    # a fresh plan; only the JVM/JIT stays warm — steady state, which
-    # is the number that scales).
-    for name in names:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _run(cat[name].fn(spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        # round 5: outside-VM stalls measured up to 25s on a query
-        # whose floor is 1.8s (8-repeat probe, quiet loadavg). If the
-        # second-best run is 2x the best, the sample is stall-heavy
-        # and the best itself may be inflated — take a 4th.
-        if sorted(runs)[1] > 2.0 * sorted(runs)[0]:
-            t0 = time.perf_counter()
-            _run(cat[name].fn(spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        times[name] = round(min(runs), 4)
-
+    # Min over repeats measures the engine, not a neighbour's stall.
+    # Each .fn call builds a fresh plan; the JVM/JIT and the session
+    # cache stay warm (steady state, the number that scales).
+    times = {name: round(min(best_of(lambda: run(name))), 4) for name in names}
     total = round(sum(times.values()), 4)
 
-    # Full-registry sweep (every registered query, one timed run each):
-    # regressions outside the headline set stay visible. Single-run
-    # timings — the same sporadic-stall caveat applies per query, so
-    # judge the DISTRIBUTION, not one outlier. SPARK_GRAFT_BENCH_SWEEP=0
-    # skips it while iterating locally.
+    # Full-registry sweep, one timed run per query, so regressions
+    # outside the headline set stay visible; judge its distribution,
+    # not one outlier. SPARK_GRAFT_BENCH_SWEEP=0 skips it.
     sweep: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_BENCH_SWEEP", "1") != "0":
         for name in sorted(cat):
-            t0 = time.perf_counter()
-            _run(cat[name].fn(spark, sf_dir))
-            sweep[name] = round(time.perf_counter() - t0, 4)
-        # Outlier re-check: the box's sporadic outside-VM stalls can
-        # inflate a single-run timing 10-25x. Re-time anything over
-        # 5 s once and keep the min — a real slow query stays slow,
-        # a stall victim gets its true number (bounded extra cost:
-        # only the outliers re-run).
+            sweep[name] = round(timed(lambda: run(name)), 4)
+        # Re-time anything over 5 s once and keep the min: a slow query
+        # stays slow, a stall victim gets its true number. The cache is
+        # cleared first so the re-run pays the builds the first run
+        # paid instead of timing a cache hit.
         for name, t in list(sweep.items()):
             if t > 5.0:
-                # Session-cache honesty (found r12): the re-run must
-                # not hit frames the first, timed run materialized.
-                # dedup_clusters' cold build is ~4-5 s; when that
-                # crossed this 5 s threshold (r10/r11), the re-run hit
-                # the session-cached cluster map and recorded a 0.02-
-                # 0.04 s cache-hit as the query's floor — a 130x
-                # phantom cliff at the threshold. Clearing the cache
-                # makes the re-run pay the same builds the first run
-                # paid (min() still discards any extra cost this adds).
-                from big_data_final_project_spark.operators import (
-                    scale as _scale,
-                )
+                clear_session_cache()
+                sweep[name] = round(min(t, timed(lambda: run(name))), 4)
 
-                for _df in _scale._SESSION_CACHE.values():
-                    try:  # free executor blocks, not just the refs
-                        _df.unpersist(blocking=False)
-                    except Exception:
-                        pass
-                _scale._SESSION_CACHE.clear()
-                t0 = time.perf_counter()
-                _run(cat[name].fn(spark, sf_dir))
-                sweep[name] = round(
-                    min(t, time.perf_counter() - t0), 4
-                )
-
-    probe_end = _calibration_probe(spark)
+    probe_end = calibration_probe(spark)
 
     out = {
         "metric": "headline_queries_total_wall",
@@ -242,17 +232,13 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "sf": sf_val,
-        # Box-speed calibration (VERDICT r6 #3): min-of-3 of a pinned
-        # synthetic shuffle+agg, before and after the headline loop.
+        # box-speed calibration before and after the headline loop
         "probe_sec": {"start": probe_start, "end": probe_end},
     }
     if sweep:
-        # The full per-query sweep goes to a FILE, not stdout: the
-        # driver keeps only the last ~2000 chars of output, and a
-        # 180-entry JSON line pushed its own opening brace out of that
-        # window in rounds 2-3 (BENCH_r0{2,3}.json: "parsed": null).
-        # Stdout stays a compact single line; the sweep artifact is
-        # committed alongside for the judge.
+        # The full per-query sweep goes to a FILE, not stdout: only
+        # the last ~2000 chars of output are kept, and a 180-entry line
+        # pushes its own opening brace out of that window.
         out["sweep_total"] = round(sum(sweep.values()), 4)
         out["sweep_n"] = len(sweep)
         out["sweep_slowest"] = dict(

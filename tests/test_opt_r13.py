@@ -69,6 +69,10 @@ def test_recursive_components_pairs_are_staged(spark, sf_dir):
     # the signature pipeline's band-hash machinery must NOT be in the
     # recursion's plan anymore
     assert "band_hash" not in plan and "band_idx" not in plan
+    # name-independent form of the same invariant: the staged pair
+    # list is the plan's only source, so no parquet scan (physical
+    # FileScan or logical Relation) remains anywhere in it
+    assert "FileScan" not in plan and "parquet" not in plan.lower()
 
 
 def test_prefix_filter_join_giant_doc_bound(spark, tmp_path):

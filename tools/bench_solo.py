@@ -1,8 +1,7 @@
 #!/usr/bin/env python
-"""Persisted solo floor-of-N bench for the standing watch list
-(VERDICT r10 #3): every cross-round perf adjudication so far leaned
-on prose solo numbers that can't be re-checked later. This tool
-measures each watch-list query ALONE (best-of-N noop executions,
+"""Persisted solo floor-of-N bench for the standing watch list, so a
+cross-round perf claim rests on numbers that can be re-checked. This
+tool measures each watch-list query ALONE (best-of-N noop executions,
 nothing else running) plus the calibration probe before and after,
 and writes BENCH_SOLO.json stamped with the same source digest the
 correctness sweeps carry — tools/check_artifacts.py verifies it, so
@@ -23,7 +22,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -76,55 +74,31 @@ N_RUNS = 3
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    try:
-        sf_val: object = float(sf)
-    except ValueError:
-        sf_val = sf
+    sf_val = bench.sf_value(sf_dir)
     spark = get_spark(app_name="bench_solo")
     cat = catalog()
     names = [n for n in WATCH_LIST if n in cat]
+    bench.warm_up(spark, cat[names[0]].fn(spark, sf_dir))
 
-    # same warm-up discipline as bench.py: one full untimed run + one
-    # tiny Arrow job so JIT/codegen/worker-pool spawn never bills the
-    # first timed query
-    bench._run(cat[names[0]].fn(spark, sf_dir))
-    spark.range(
-        64, numPartitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    ).mapInPandas(lambda it: (pdf for pdf in it), schema="id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    probe_start = bench._calibration_probe(spark)
+    probe_start = bench.calibration_probe(spark)
     digest = source_digest()
     queries: dict[str, dict] = {}
     for name in names:
-        runs: list[float] = []
-        for _ in range(N_RUNS):
-            t0 = time.perf_counter()
-            bench._run(cat[name].fn(spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        # stall guard (same rule as bench.py): if the second-best run
-        # doubles the best, the sample is stall-heavy — take a 4th
-        if sorted(runs)[1] > 2.0 * sorted(runs)[0]:
-            t0 = time.perf_counter()
-            bench._run(cat[name].fn(spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
+        runs = bench.best_of(lambda: bench.noop(cat[name].fn(spark, sf_dir)), N_RUNS)
         queries[name] = {
             "best": round(min(runs), 4),
             "runs": [round(r, 4) for r in runs],
             "source_digest": digest,
         }
         print(f"{name}: best {queries[name]['best']} {queries[name]['runs']}")
-    probe_end = bench._calibration_probe(spark)
+    probe_end = bench.calibration_probe(spark)
 
-    # Cross-round probe-scaled floors (VERDICT r11 #1): each round's
-    # best is divided by that round's probe floor (the box measure),
-    # and the FLOOR is the min of those ratios over every round this
-    # artifact has lived through — so "engine or box?" is answered by
-    # comparing a round's probe-scaled best to the standing floor,
-    # without a judge-run sweep diff. The floor is carried forward
-    # from the previous artifact (itself digest-stamped per round).
+    # Cross-round probe-scaled floors: each round's best is divided by
+    # that round's probe floor (the box measure), and the FLOOR is the
+    # min of those ratios over every round this artifact has lived
+    # through — so "engine or box?" is answered by comparing a round's
+    # probe-scaled best to the standing floor. The floor is carried
+    # forward from the previous (digest-stamped) artifact.
     path = os.path.join(REPO, "BENCH_SOLO.json")
     prev_q: dict[str, dict] = {}
     try:
@@ -133,22 +107,17 @@ def main() -> None:
         if prev.get("sf") != sf_val:  # floors are per-scale-factor
             raise ValueError("sf mismatch — start a fresh floor history")
         prev_q = prev.get("queries", {})
-        prev_probe = min(prev["probe_sec"].values())
-    except (OSError, ValueError, KeyError):
-        prev, prev_probe = None, None
+    except (OSError, ValueError):
+        pass
     probe_floor = min(probe_start, probe_end)
     for name, rec in queries.items():
         scaled = rec["best"] / probe_floor
         floors = [scaled]
         rounds = 1
         p = prev_q.get(name)
-        if p is not None:
-            if "probe_scaled_floor" in p:
-                floors.append(p["probe_scaled_floor"])
-                rounds += p.get("floor_rounds", 1)
-            elif prev_probe:  # pre-r12 artifact: derive one point
-                floors.append(p["best"] / prev_probe)
-                rounds += 1
+        if p is not None and "probe_scaled_floor" in p:
+            floors.append(p["probe_scaled_floor"])
+            rounds += p.get("floor_rounds", 1)
         rec["probe_scaled_best"] = round(scaled, 4)
         rec["probe_scaled_floor"] = round(min(floors), 4)
         rec["floor_rounds"] = rounds

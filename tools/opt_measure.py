@@ -1,15 +1,14 @@
 #!/usr/bin/env python
-"""Optimization-round measurement harness (guide §1).
+"""Optimization measurement harness: cold timings plus plans.
 
 For each named query (default: bench.py's HEADLINE list):
-  * times N noop-sink executions (guide §1.4) with the session-scoped
-    intermediate cache CLEARED before every run, so each timing pays
-    the query's full build cost — bench.py's min-of-N leaves the
-    cache warm between repeats, which hides exactly the build work an
-    optimization round needs to see;
+  * times N noop-sink executions with the session-scoped intermediate
+    cache CLEARED before every run, so each timing pays the query's
+    full build cost — bench.py's best-of-N leaves the cache warm
+    between repeats, which hides exactly the build work an
+    optimization needs to see (bench.best_of's stall guard applies);
   * records best / all runs;
-  * writes .explain('formatted') to plans/<round>/<query>_<tag>.txt
-    (round tag from $OPT_MEASURE_ROUND, default r13).
+  * writes .explain('formatted') to plans/<round>/<query>_<tag>.txt.
 
 Usage:
     python tools/opt_measure.py <tag> [n_runs] [query ...]
@@ -26,28 +25,15 @@ import io
 import json
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from big_data_final_project_spark.operators import scale  # noqa: E402
 from big_data_final_project_spark.registry import catalog  # noqa: E402
 from big_data_final_project_spark.session import get_spark  # noqa: E402
 
-
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _clear_session_cache() -> None:
-    for _df in scale._SESSION_CACHE.values():
-        try:
-            _df.unpersist(blocking=False)
-        except Exception:
-            pass
-    scale._SESSION_CACHE.clear()
+import bench  # noqa: E402
 
 
 def main() -> None:
@@ -56,47 +42,35 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name=f"opt-measure-{tag}")
     cat = catalog()
-
-    if len(sys.argv) > 3:
-        names = sys.argv[3:]
-        unknown = [n for n in names if n not in cat]
-        if unknown:
-            sys.exit(f"unknown queries (not in catalog): {unknown}")
-    else:
-        sys.path.insert(0, REPO)
-        import bench
-
-        names = [n for n in bench.HEADLINE if n in cat]
+    names = sys.argv[3:] or [n for n in bench.HEADLINE if n in cat]
+    unknown = [n for n in names if n not in cat]
+    if unknown:
+        sys.exit(f"unknown queries (not in catalog): {unknown}")
     if not names:
         sys.exit("no queries to measure (HEADLINE/catalog intersection empty)")
 
-    round_tag = os.environ.get("OPT_MEASURE_ROUND", "r13")
-    plans_dir = os.path.join(REPO, "plans", round_tag)
+    plans_dir = os.path.join(REPO, "plans", os.environ.get("OPT_MEASURE_ROUND", "r13"))
     os.makedirs(plans_dir, exist_ok=True)
-
-    # Warm JVM + Arrow workers once (bench.py discipline).
-    _noop(cat[names[0]].fn(spark, sf_dir))
-    spark.range(64, numPartitions=8).mapInPandas(
-        lambda it: (p for p in it), schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    bench.warm_up(spark, cat[names[0]].fn(spark, sf_dir))
 
     out: dict[str, dict] = {}
     for name in names:
         if os.environ.get("OPT_MEASURE_SKIP_PLANS") != "1":
-            _clear_session_cache()
-            df = cat[name].fn(spark, sf_dir)
+            bench.clear_session_cache()
             buf = io.StringIO()
             with redirect_stdout(buf):
-                df.explain("formatted")
+                cat[name].fn(spark, sf_dir).explain("formatted")
             with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as fh:
                 fh.write(buf.getvalue())
-        runs = []
-        for _ in range(n_runs):
-            _clear_session_cache()
+
+        def cold() -> None:
+            bench.clear_session_cache()
             spark.sparkContext.setJobDescription(f"opt:{tag}:{name}")
-            t0 = time.perf_counter()
-            _noop(cat[name].fn(spark, sf_dir))
-            runs.append(round(time.perf_counter() - t0, 4))
+
+        def run() -> None:
+            bench.noop(cat[name].fn(spark, sf_dir))
+
+        runs = [round(r, 4) for r in bench.best_of(run, n_runs, cold)]
         spark.sparkContext.setJobDescription(None)
         out[name] = {"best": min(runs), "runs": runs}
         print(f"{name}: best={min(runs)} runs={runs}", flush=True)
